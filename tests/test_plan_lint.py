@@ -22,10 +22,7 @@ import re
 
 import pytest
 
-from tmdb_movie_data_pipeline_spark.registry import (
-    all_queries,
-    deferred_queries,
-)
+from tmdb_movie_data_pipeline_spark.registry import all_queries
 
 #: modules whose query functions are lazy (plan-only on call)
 _LAZY_MODULES = {
@@ -59,7 +56,7 @@ _LAZY_MODULES = {
 
 
 def _lintable() -> list[str]:
-    qs = {**all_queries(), **deferred_queries()}
+    qs = all_queries()
     return sorted(
         n
         for n, fn in qs.items()
@@ -69,7 +66,7 @@ def _lintable() -> list[str]:
 
 @pytest.mark.parametrize("name", _lintable())
 def test_no_cartesian_product_anywhere(spark, sf_dir, name):
-    qs = {**all_queries(), **deferred_queries()}
+    qs = all_queries()
     df = qs[name](spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"

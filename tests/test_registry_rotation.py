@@ -3,22 +3,33 @@
 Rounds 3 and 4 both shipped a stale hand-ordered priority list that left
 late-registered queries just past the driver's ~50-row verification cap, so
 they never received a CORRECTNESS row (VERDICT r2 item #1, VERDICT r4 item
-#1).  The ordering is now DERIVED from the union of every driver-written
-CORRECTNESS_r*.json; these tests pin the invariants so any regression of
-that logic — or any future registration pattern that would push a
-never-verified query past the cap — fails CI instead of silently costing a
-round of coverage.
+#1).  The ordering is now DERIVED from the driver-written
+CORRECTNESS_r*.json files alone; these tests pin the ordering contract,
+partly by simulating the files later driver rounds write, so any regression
+of that logic fails CI instead of silently costing a round of coverage.
 """
 
 from __future__ import annotations
 
+import json
+import math
+import shutil
+from pathlib import Path
+
 import pytest
 
-from tmdb_movie_data_pipeline_spark import registry
+from tmdb_movie_data_pipeline_spark import catalog, registry
+
+ROOT = Path(__file__).resolve().parent.parent
 
 # The driver verified exactly 50 rows in rounds 1, 2 and 4.  Leave margin
 # below that in case a round's budget comes in slightly under.
 DRIVER_CAP_FLOOR = 45
+
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True,
+         "spark_rows": 1, "oracle_rows": 1, "err": None}
+ERRD = {"rows_match": None, "schema_match": None, "hash_match": None,
+        "spark_rows": 1, "oracle_rows": None, "err": "simulated oracle err"}
 
 
 @pytest.fixture(scope="module")
@@ -79,38 +90,14 @@ def test_verified_names_nonempty_after_four_rounds():
     assert len(registry._driver_verified_names()) >= 100
 
 
-def test_rest_bucket_rotates_with_round_token():
-    """Re-confirmation must CYCLE: different round tokens permute the
-    green-and-unchanged tail differently (so successive rounds re-confirm
-    different subsets under the cap), while the same token is stable."""
-    names = sorted(registry.all_queries())
-    verified = registry._driver_verified_names()
-    head = {n for n in names if n not in verified} | set(
-        registry._CHANGED_THIS_ROUND
-    )
-    o6 = registry.verification_order(names, round_token=6)
-    o7 = registry.verification_order(names, round_token=7)
-    assert o6 == registry.verification_order(names, round_token=6)
-    rest6 = [n for n in o6 if n not in head]
-    rest7 = [n for n in o7 if n not in head]
-    assert sorted(rest6) == sorted(rest7)
-    assert rest6 != rest7, "round token must change the re-confirm order"
-    # the rotation may not displace the coverage guarantees:
-    never = [n for n in o6 if n not in verified]
-    assert o6[: len(never)] == never
-
-
 def test_changed_this_round_reset_discipline():
     """_CHANGED_THIS_ROUND is a per-round scratch list (VERDICT r5 #3):
     every entry must have been touched in the CURRENT session's diff —
     approximated here as 'its registering module imports cleanly and the
     name is registered' plus a hard cap so the list can't silently grow
     into a standing priority override."""
-    # Cap raised 12 → 30 in r21 session 1, → 35 in session 2: an
-    # OPTIMIZATION round legitimately rewrites many physical plans at once
-    # (r21 touched 23 in session 1 — kernels, ACID writes, IVF joins — and
-    # 9 more duplicated-subtree removals in session 2, each oracle-proven
-    # identical before listing). The guard still catches a list that
+    # An optimization round legitimately rewrites many physical plans at
+    # once (r21 listed 32, r22 34); the guard still catches a list that
     # silently accretes across rounds.
     assert len(registry._CHANGED_THIS_ROUND) <= 35, (
         "suspiciously long changed-list — reset it at round start"
@@ -121,16 +108,8 @@ def test_errd_driver_row_is_unverified():
     """VERDICT r8 item #2: an err'd / mismatched driver row must NOT count
     as verified — only a fully green latest row does — so oracle-environment
     failures automatically re-enter priority bucket 1 next round instead of
-    waiting up to ~⌈N/50⌉ rounds in the re-confirmation rotation."""
-    green = {
-        "rows_match": True,
-        "schema_match": True,
-        "hash_match": True,
-        "spark_rows": 5,
-        "oracle_rows": 5,
-        "err": None,
-    }
-    assert registry._row_is_green(green)
+    waiting in the re-confirmation tail."""
+    assert registry._row_is_green(GREEN)
     # the literal shape the r8 DuckDB OOM burst wrote:
     errd = {
         "rows_match": None,
@@ -141,29 +120,20 @@ def test_errd_driver_row_is_unverified():
         "err": "duckdb.duckdb.OutOfMemoryException: Out of Memory Error",
     }
     assert not registry._row_is_green(errd)
-    assert not registry._row_is_green({**green, "hash_match": False})
-    assert not registry._row_is_green({**green, "rows_match": False})
-    assert not registry._row_is_green({**green, "err": "boom"})
+    assert not registry._row_is_green({**GREEN, "hash_match": False})
+    assert not registry._row_is_green({**GREEN, "rows_match": False})
+    assert not registry._row_is_green({**GREEN, "err": "boom"})
     assert not registry._row_is_green(None)
 
 
 def test_latest_row_wins_for_verified_names():
-    """LATEST-row semantics against the real CORRECTNESS files: a name is
-    verified iff its most recent driver row is green — an err that later
-    re-greens counts (the r8 DuckDB-OOM burst all re-greened in r9), and a
-    green that later errs drops out. The r10 predecessor of this test froze
-    the r8 snapshot ("every r8 err name is unverified"), which became false
-    the moment the driver wrote CORRECTNESS_r09.json re-greening them
-    (VERDICT r9 item #1) — assert the invariant, never a round's state."""
-    import json
-    import re
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
+    """LATEST-row semantics against the real CORRECTNESS files, checked
+    against an independent parse: a name is verified iff its most recent
+    driver row is green — an err that later re-greens counts, and a green
+    that later errs drops out. Asserts the invariant, never a round's
+    state."""
     rounds = sorted(
-        (int(m.group(1)), p)
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", p.name))
+        (int(p.stem.split("_r")[1]), p) for p in ROOT.glob("CORRECTNESS_r*.json")
     )
     if not rounds:
         pytest.skip("no driver correctness records")
@@ -187,322 +157,136 @@ def test_latest_row_wins_for_verified_names():
 
 def test_latest_row_wins_synthetic_supersession(tmp_path, monkeypatch):
     """The supersession rule itself, independent of what the real files
-    happen to contain this round: green→err drops out, err→green re-enters."""
-    import json
-
-    (tmp_path / "tmdb_movie_data_pipeline_spark").mkdir()
-    g = {"rows_match": True, "schema_match": True, "hash_match": True,
-         "spark_rows": 1, "oracle_rows": 1, "err": None}
-    e = {"rows_match": None, "schema_match": None, "hash_match": None,
-         "spark_rows": 1, "oracle_rows": None, "err": "boom"}
+    happen to contain this round: green→err drops out, err→green re-enters,
+    and the last green round is remembered through a later err."""
     (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"a": g, "b": e})
+        json.dumps({"a": GREEN, "b": ERRD})
     )
     (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"a": e, "b": g})
+        json.dumps({"a": ERRD, "b": GREEN})
     )
-    monkeypatch.setattr(
-        registry, "__file__",
-        str(tmp_path / "tmdb_movie_data_pipeline_spark" / "registry.py"),
-    )
+    monkeypatch.setattr(registry, "_HISTORY_ROOT", tmp_path)
+    newest, hist = registry.driver_history()
+    assert newest == 2 and registry._round_token() == 3
     verified = registry._driver_verified_names()
     assert "b" in verified, "err in r1, green in r2 → latest green counts"
     assert "a" not in verified, "green in r1, err in r2 → latest err wins"
+    assert (hist["a"].last_green, hist["a"].rows) == (1, 2)
+    assert (hist["b"].first_green, hist["b"].last_green) == (2, 2)
 
 
-def test_reconfirmation_completeness_bound():
-    """Every green-and-unchanged name must re-enter the current round's
-    bucket-3 window within the rounds it takes the per-round strides to
-    sum to N — at most ceil(N / RECONFIRM_STRIDE) planning-default rounds
-    plus the recorded below-default rounds (VERDICT r7 #7 / r8 #6 / r9 #8).
-    The windows tile by construction (round k+1's shift starts exactly
-    where round k's stride-wide window ended), so coverage is exact, not
-    probabilistic — this test walks the windows and checks the union."""
-    import math
-
-    names = sorted(registry.all_queries())
+def test_tail_is_least_recently_verified_first(order):
+    """Bucket 3 is sorted by last green round, oldest first, with ties in
+    registration order — no name is re-confirmed before an older one."""
+    hist = registry.driver_history()[1]
     verified = registry._driver_verified_names()
-    head = {n for n in names if n not in verified} | set(
-        registry._CHANGED_THIS_ROUND
+    changed = set(registry._CHANGED_THIS_ROUND)
+    tail = [n for n in order if n in verified and n not in changed]
+    assert order[len(order) - len(tail) :] == tail
+    registration = list(registry._QUERIES)
+    assert tail == sorted(
+        tail, key=lambda n: (hist[n].last_green, registration.index(n))
     )
-    rest_all = {n for n in names if n not in head}
-    if not rest_all:
-        pytest.skip("no green-and-unchanged names")
-    n = len(rest_all)
-    # recorded rounds may contribute less than the planning default, and
-    # the scheme cutover deliberately re-covers part of the last fixed
-    # window (one extra round); the worst-case bound grows by exactly those
-    shortfall_rounds = sum(
-        1
-        for s in registry._ROUND_STRIDES.values()
-        if s < registry.RECONFIRM_STRIDE
-    )
-    max_rounds = (
-        math.ceil(n / registry.RECONFIRM_STRIDE) + shortfall_rounds + 1
-    )
-    for start in (1, 9, 17):  # bound must hold from ANY starting round
-        covered: set[str] = set()
-        t = start
-        while covered != rest_all:
-            assert t - start < max_rounds, (
-                f"{len(rest_all - covered)} names not re-confirmed within "
-                f"{max_rounds} rounds from token {start}: "
-                f"{sorted(rest_all - covered)[:5]}"
-            )
-            stride = registry.reconfirm_stride(t)
-            order = registry.verification_order(names, round_token=t)
-            rest = [m for m in order if m in rest_all]
-            covered.update(rest[:stride])
-            t += 1
 
 
-def test_round_strides_recorded_and_continuous():
-    """The dynamic-stride ledger (VERDICT r9 #8) must stay honest — but
-    only about ROUNDS THAT ALREADY RAN (VERDICT r10 #1, the design rule
-    after three straight rounds lost to round-state bookkeeping): the
-    driver writes ``CORRECTNESS_r{N}.json`` after every session, which
-    advances ``_round_token()`` to N+1, so any assertion of the form
-    "the current token is already recorded" is deterministically red at
-    every post-driver state. The invariants that CAN'T be invalidated by
-    a new driver file:
+def _driver_rounds(tmp_path, monkeypatch):
+    """Simulate driver rounds on a copy of the real CORRECTNESS files: each
+    round verifies the first DRIVER_CAP_FLOOR names of the order, all green
+    except the last, which errs. Yields (order, sampled, err_name) after
+    each round's file is written; the changed list is reset, as it is at
+    the start of every round."""
+    for p in ROOT.glob("CORRECTNESS_r*.json"):
+        shutil.copy(p, tmp_path / p.name)
+    monkeypatch.setattr(registry, "_HISTORY_ROOT", tmp_path)
+    while True:
+        token = registry._round_token()
+        order = registry.verification_order()
+        sampled = order[:DRIVER_CAP_FLOOR]
+        rows = {n: GREEN for n in sampled}
+        rows[sampled[-1]] = ERRD
+        (tmp_path / f"CORRECTNESS_r{token:02d}.json").write_text(json.dumps(rows))
+        monkeypatch.setattr(registry, "_CHANGED_THIS_ROUND", [])
+        assert registry._round_token() == token + 1
+        yield order, sampled, sampled[-1]
 
-    * every dynamic-scheme round that actually ran (``_DYNAMIC_BASE`` up
-      to, excluding, the current token) has a recorded stride — a missing
-      past round would silently mis-tile every later re-confirmation
-      window via the planning-default fallback (ADVICE r10 item 2);
-    * if the CURRENT round's stride happens to be recorded (normal
-      mid-session state once activation is final), it equals the live
-      driver-budget arithmetic ``max(0, DRIVER_CAP_FLOOR - |head|)`` —
-      activating a query without updating the ledger still reds CI;
-    * if it is NOT yet recorded (the state right after a driver file
-      advances the token), ``reconfirm_stride`` must DERIVE the same
-      value live from the head size — never the planning default — so
-      the rotation is correct even before the session records it;
-    * the cutover is continuous: the cumulative shift at the dynamic base
-      round equals the historic fixed-formula shift of its predecessor.
 
-    Why no remaining assertion can flip red when the driver writes
-    ``CORRECTNESS_r{N}.json``: the new file only (a) advances the token —
-    the past-rounds range then ends at N, whose stride the session
-    recorded before the driver ran, and the new token N+1 takes the
-    not-recorded branch, which compares two applications of the same
-    live formula; and (b) greens/errs rows — which moves names between
-    buckets, changing BOTH sides of that live comparison identically.
-    """
-    token = registry._round_token()
-    missing = [
-        r
-        for r in range(registry._DYNAMIC_BASE, token)
-        if r not in registry._ROUND_STRIDES
-    ]
-    assert not missing, (
-        f"rounds {missing} ran under the dynamic scheme but have no "
-        "recorded stride — later windows would silently mis-tile"
-    )
-    for r, s in registry._ROUND_STRIDES.items():
-        assert r >= registry._DYNAMIC_BASE
-        assert 0 <= s <= registry.DRIVER_CAP_FLOOR
-    names = list(registry.all_queries())
-    verified = registry._driver_verified_names()
-    never = [m for m in names if m not in verified]
-    changed = [
-        m
-        for m in registry._CHANGED_THIS_ROUND
-        if m in set(names) and m in verified
-    ]
-    head = len(never) + len(changed)
-    expect = max(0, registry.DRIVER_CAP_FLOOR - head)
-    if token in registry._ROUND_STRIDES:
-        assert registry._ROUND_STRIDES[token] == expect, (
-            f"recorded stride {registry._ROUND_STRIDES[token]} for round "
-            f"{token} != cap arithmetic {expect} "
-            f"(head = {len(never)} never + {len(changed)} changed)"
+def test_reconfirmation_completeness_bound(tmp_path, monkeypatch):
+    """Every registered name gets a fresh green row within
+    ceil(N / (cap - 1)) + 1 simulated rounds: each round greens cap - 1
+    names that are the least recently verified, and the one err costs one
+    extra round. Per round, the err'd name re-enters the head and the
+    freshly greened names move to the tail in registration order; the
+    catalog regenerated against the simulated files keeps identical
+    registry-static fields."""
+    checked_in = json.loads((ROOT / "CATALOG.json").read_text())["queries"]
+    registry.all_queries()
+    registration = list(registry._QUERIES)
+    max_rounds = math.ceil(len(registration) / (DRIVER_CAP_FLOOR - 1)) + 1
+    covered: set[str] = set()
+    for n_round, (_, sampled, err_name) in enumerate(
+        _driver_rounds(tmp_path, monkeypatch), 1
+    ):
+        covered |= set(sampled) - {err_name}
+        new_order = registry.verification_order()
+        assert new_order[0] == err_name, "err'd name must lead the next round"
+        fresh = [n for n in registration if n in sampled and n != err_name]
+        assert new_order[len(new_order) - len(fresh) :] == fresh
+        live = catalog.build_catalog()["queries"]
+        assert set(live) == set(checked_in)
+        for name, row in live.items():
+            for f in catalog.STATIC_FIELDS:
+                assert checked_in[name][f] == row[f]
+        if covered == set(registration):
+            break
+        assert n_round < max_rounds, (
+            f"{len(set(registration) - covered)} names not re-confirmed "
+            f"within {max_rounds} rounds: "
+            f"{sorted(set(registration) - covered)[:5]}"
         )
-    else:
-        assert registry.reconfirm_stride(token, head_size=head) == expect, (
-            "unrecorded current round must derive its stride live from "
-            "the head size, not the planning default"
+
+
+def test_rotation_family_survives_next_driver_file(tmp_path, monkeypatch):
+    """VERDICT r11 #5: the design rule ("never assert the current round's
+    file state") as a mechanically checked property. Over two consecutive
+    simulated driver rounds the catalog's as_of_round advances with the
+    files, fresh greens carry the new round, the err'd name is the only
+    unverified one, and the reconfirm_debt rollup stays internally
+    consistent with the regenerated rows."""
+    rounds = _driver_rounds(tmp_path, monkeypatch)
+    for _ in range(2):
+        token = registry._round_token()
+        _, sampled, err_name = next(rounds)
+        assert registry._driver_verified_names() >= set(sampled) - {err_name}
+        live = catalog.build_catalog()
+        assert live["as_of_round"] == token + 1
+        rows = live["queries"]
+        assert [n for n, r in rows.items() if not r["latest_green"]] == [err_name]
+        assert all(
+            rows[n]["last_green_round"] == token for n in sampled if n != err_name
         )
-    assert (
-        registry._cumulative_shift(registry._DYNAMIC_BASE)
-        == (registry._DYNAMIC_BASE - 1) * registry.RECONFIRM_STRIDE
-    )
+        last = {
+            n: r["last_green_round"]
+            for n, r in rows.items()
+            if r["last_green_round"] is not None
+        }
+        debt = live["reconfirm_debt"]
+        assert debt["threshold_round"] == token
+        assert debt["n_active_stale"] == sum(r < token for r in last.values())
+        assert debt["n_never_verified"] == len(rows) - len(last)
 
 
 def test_every_registered_query_appears_in_coverage_doc():
     """COVERAGE.md is the judge-facing operator inventory — every
-    registered query (active or deferred) must have a backticked mention,
-    except the TPC-H shapes covered by the explicit grouped row."""
-    from pathlib import Path
-
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
-
-    cov = (Path(__file__).resolve().parent.parent / "COVERAGE.md").read_text()
+    registered query must have a backticked mention, except the TPC-H
+    shapes covered by the explicit grouped row."""
+    cov = (ROOT / "COVERAGE.md").read_text()
     grouped = {  # the `q1`-`q22` TPC-H breadth row covers these
         f"q{i}_" for i in range(1, 23)
     }
     missing = [
         n
-        for n in sorted(set(all_queries()) | set(deferred_queries()))
+        for n in sorted(registry.all_queries())
         if f"`{n}`" not in cov
         and not any(n.startswith(g) for g in grouped)
     ]
     assert not missing, f"queries without a COVERAGE.md row: {missing}"
-
-
-def test_rotation_family_survives_next_driver_file(tmp_path, monkeypatch):
-    """VERDICT r11 #5 + r12 #1: the design rule ("never assert the
-    current round's file state") as a mechanically checked property.
-    The r12 incarnation of this test asserted the SIMULATED round's
-    stride was already in ``_ROUND_STRIDES`` — true only in the window
-    between the session recording next round's stride and the real
-    driver file landing, so the vaccine itself went red the moment
-    CORRECTNESS_r12.json arrived (the groundhog-day class, fourth
-    recurrence). Now TIME-INVARIANT by construction:
-
-    * ledger membership is demanded only for rounds that actually RAN
-      (real driver files exist — the same bound the sibling
-      test_round_strides_recorded_and_continuous pins);
-    * the upcoming round asserts whichever resolution path applies:
-      recorded value == cap arithmetic when the ledger has it, else
-      the LIVE head-size derivation — never the planning default;
-    * the simulation advances TWO consecutive rounds (latest-real-file
-      state N → N+1 → N+2), so the whole invariant family provably
-      holds at every point of the round lifecycle — including
-      immediately after a driver file lands with the next stride not
-      yet recorded, the exact state that reddened the r12 test.
-
-    Per simulated round, using the exact row shape the driver writes
-    (greens for the head + window, one err): the token advances; the
-    err'd name re-enters bucket 1 and the head stays a contiguous
-    block inside the driver cap; greened names leave the head; the
-    catalog regenerates against the simulated files with identical
-    registry-static fields and an internally consistent
-    reconfirm_debt rollup.
-    """
-    import json
-    import shutil
-    from pathlib import Path
-
-    from tmdb_movie_data_pipeline_spark import catalog
-
-    root = Path(__file__).resolve().parent.parent
-    (tmp_path / "tmdb_movie_data_pipeline_spark").mkdir()
-    for p in root.glob("CORRECTNESS_r*.json"):
-        shutil.copy(p, tmp_path / p.name)
-    monkeypatch.setattr(
-        registry, "__file__",
-        str(tmp_path / "tmdb_movie_data_pipeline_spark" / "registry.py"),
-    )
-    monkeypatch.setattr(catalog, "_HISTORY_ROOT", tmp_path)
-
-    # ledger completeness ONLY over rounds with a real driver file —
-    # the upcoming round may legitimately be unrecorded (post-driver,
-    # pre-session state); its resolution is asserted inside the loop
-    token0 = registry._round_token()
-    missing = [
-        r
-        for r in range(registry._DYNAMIC_BASE, token0)
-        if r not in registry._ROUND_STRIDES
-    ]
-    assert not missing, (
-        f"rounds {missing} have real driver files but no recorded "
-        "stride — the ledger must be written before the driver runs"
-    )
-
-    checked_in = json.loads((root / "CATALOG.json").read_text())
-    green = {"rows_match": True, "schema_match": True, "hash_match": True,
-             "spark_rows": 1, "oracle_rows": 1, "err": None}
-    errd = {"rows_match": None, "schema_match": None, "hash_match": None,
-            "spark_rows": 1, "oracle_rows": None, "err": "simulated oracle err"}
-
-    for _ in range(2):  # two consecutive simulated driver rounds
-        token = registry._round_token()
-        order = registry.verification_order()
-        verified_before = registry._driver_verified_names()
-        never_before = [n for n in order if n not in verified_before]
-        changed_before = [
-            n
-            for n in registry._CHANGED_THIS_ROUND
-            if n in set(order) and n in verified_before
-        ]
-        head_b = len(never_before) + len(changed_before)
-        # the upcoming round's stride resolves to the cap arithmetic on
-        # BOTH resolution paths — recorded ledger value or live
-        # head-size derivation — never the planning default
-        expect = max(0, registry.DRIVER_CAP_FLOOR - head_b)
-        if token in registry._ROUND_STRIDES:
-            assert registry._ROUND_STRIDES[token] == expect, (
-                f"recorded stride {registry._ROUND_STRIDES[token]} for "
-                f"round {token} != cap arithmetic {expect}"
-            )
-        else:
-            assert registry.reconfirm_stride(token, head_size=head_b) == expect
-
-        # the driver's observed budget (50 rows r1/r2/r4/r9)
-        sampled = order[:50]
-        rows: dict[str, dict] = {n: green for n in sampled}
-        err_name = sampled[-1]
-        rows[err_name] = errd
-        (tmp_path / f"CORRECTNESS_r{token:02d}.json").write_text(
-            json.dumps(rows)
-        )
-
-        assert registry._round_token() == token + 1
-
-        names = list(registry.all_queries())
-        verified = registry._driver_verified_names()
-        never = [n for n in names if n not in verified]
-        changed = [
-            n
-            for n in registry._CHANGED_THIS_ROUND
-            if n in set(names) and n in verified
-        ]
-        head = len(never) + len(changed)
-        # the just-advanced, unrecorded token derives its stride live
-        assert registry.reconfirm_stride(token + 1, head_size=head) == max(
-            0, registry.DRIVER_CAP_FLOOR - head
-        )
-
-        # bucket transitions: greens left the head, the err re-entered it
-        assert err_name in never
-        assert set(never) <= set(never_before) | {err_name}
-        assert len(never) <= max(len(never_before) - len(sampled) + 1, 1)
-
-        # head block contiguity + cap (the invariant the driver depends on)
-        new_order = registry.verification_order()
-        assert new_order[: len(never)] == [
-            n for n in new_order if n not in verified
-        ][: len(never)]
-        if never:
-            worst = max(new_order.index(n) for n in never)
-            assert worst < len(never) <= registry.DRIVER_CAP_FLOOR
-
-        # catalog: static fields identical under the simulated history;
-        # debt rollup internally consistent with the regenerated rows
-        live = catalog.build_catalog()
-        assert set(live["queries"]) == set(checked_in["queries"])
-        for name, row in live["queries"].items():
-            for f in catalog.STATIC_FIELDS:
-                assert checked_in["queries"][name][f] == row[f]
-        assert live["as_of_round"] == token + 1
-        debt = live["reconfirm_debt"]
-        active = {
-            n for n, r in live["queries"].items() if r["driver_visible"]
-        }
-        last = {
-            n: live["queries"][n]["last_green_round"]
-            for n in active
-            if live["queries"][n]["last_green_round"] is not None
-        }
-        stale = {n: r for n, r in last.items() if r < token}
-        assert debt["threshold_round"] == token
-        assert debt["n_active_stale"] == len(stale)
-        assert debt["n_never_verified"] == len(active) - len(last)
-        # the simulation actually moved the debt: fresh greens not stale
-        assert all(
-            last[n] == token for n in sampled if n != err_name and n in last
-        )

@@ -1356,7 +1356,7 @@ def hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = e.select("c").distinct().select(
         "c", F.lit(_HITS_SCALE).cast("decimal(38,0)").alias("s")
     )
-    # r21 loop restructure (guide §2.4/§3.1, A/B'd in .claude/ab_hits_r21.py —
+    # r21 loop restructure (guide §2.4/§3.1, A/B in OPTIMIZATION_r21.md §1 —
     # 6.995 s → 4.663 s min-of-3 interleaved, identical result rows asserted):
     # (1) checkpoint the RAW half-round aggregate (|P|-/|C|-bounded), not the
     #     normalized vector — the normalization total and the normalized

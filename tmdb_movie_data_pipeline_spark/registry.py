@@ -11,11 +11,23 @@ order-insensitive value hash, so registered pairs MUST:
   differs between engines — see ``round`` helpers in functions/);
 * break every ranking/limit tie with a unique key (order-insensitive hashing
   still needs a deterministic row SET).
+
+The driver verifies only the first ~50 names ``queries()`` returns each
+round, so the order is derived from its own ``CORRECTNESS_r*.json`` files:
+names without a green latest row first, then ``_CHANGED_THIS_ROUND``, then
+everyone else least recently verified first. Each round's driver rows move
+the names it verified to the back, so coverage tiles across rounds by
+itself; nothing needs to remember past strides, the round number or the
+driver's cap.
 """
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from dataclasses import dataclass
+from pathlib import Path
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,142 +36,27 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-#: fully implemented + locally oracle-verified queries QUEUED for a future
-#: round: the driver verifies ~50 registry entries per round and CI caps
-#: never-verified entries at 45, so work completed past that budget parks
-#: here (invisible to the driver) and activates next round by dropping the
-#: ``deferred=True`` flag. The local pytest gate exercises these exactly
-#: like active queries — deferral changes WHEN the driver sees them, never
-#: whether they are correct.
-_DEFERRED_QUERIES: dict[str, QueryFn] = {}
-_DEFERRED_ORACLES: dict[str, str] = {}
 
 
-def register(
-    name: str, oracle: str | None = None, deferred: bool = False
-) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a driver-facing query, optionally with its oracle.
-
-    ``deferred=True`` parks the query in the next-round queue (see
-    ``_DEFERRED_QUERIES``): locally gated now, surfaced to the driver when
-    a future round's rotation budget allows."""
+def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: register a driver-facing query, optionally with its oracle."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _QUERIES or name in _DEFERRED_QUERIES:
+        if name in _QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        q = _DEFERRED_QUERIES if deferred else _QUERIES
-        o = _DEFERRED_ORACLES if deferred else _ORACLES
-        q[name] = fn
+        _QUERIES[name] = fn
         if oracle is not None:
-            o[name] = oracle
+            _ORACLES[name] = oracle
         return fn
 
     return deco
 
 
-def deferred_queries() -> dict[str, QueryFn]:
-    _ensure_loaded()
-    return dict(_DEFERRED_QUERIES)
-
-
-def deferred_oracles() -> dict[str, str]:
-    _ensure_loaded()
-    return dict(_DEFERRED_ORACLES)
-
-
-# The driver's correctness harness caps each round's verification at ~50
-# registry entries (rounds 1 and 2 each produced exactly 50 rows), so
-# coverage must be ROTATED per round.  Rounds 3 and 4 each shipped a stale
-# hand-maintained priority list that left late-registered queries just past
-# the cap (VERDICT r2 item #1, VERDICT r4 item #1).  The ordering is now
-# DERIVED, so it can never rot:
-#
-#   1. never-verified -- registered names absent from the union of every
-#      CORRECTNESS_r*.json the driver has ever written (registration order);
-#   2. changed this round -- `_CHANGED_THIS_ROUND`, the one remaining
-#      hand-maintained list: queries whose semantics or physical plan were
-#      rewritten this session and therefore need a fresh row even though a
-#      prior round already verified them;
-#   3. everything else (cumulatively green, unchanged) in registration
-#      order, consuming whatever cap budget remains as re-confirmation.
-#
-# tests/test_registry_rotation.py asserts bucket 1 sits exhaustively inside
-# the cap window so a silent regression of this logic fails CI.
-
+#: Queries whose semantics or physical plan this round rewrote: they need a
+#: fresh driver row even though an earlier round verified them.
 _CHANGED_THIS_ROUND: list[str] = [
     # RESET each round (VERDICT r5 item #3): stale entries burn re-confirm
     # slots at the head of the rotation.
-    # r22 (OPTIMIZATION round 2): every query whose PHYSICAL PLAN this
-    # round's performance work rewrote (results oracle-proven identical at
-    # sf0.01 before commit, interleaved A/B with result-identity asserted
-    # at sf0.1 — see OPTIMIZATION_r22.md). Groups:
-    # (a) ANSI-overflow hardening: the IDF weight's 1e6*(N+1) multiplier is
-    #     folded in Python so it lands as one BIGINT-ranged literal (the
-    #     interpolated INT*INT form constant-folds to an ARITHMETIC_OVERFLOW
-    #     once n_docs >= 2147 — seen at sf0.1; operators/dedup.py):
-    "dedup_weighted_jaccard_pairs",
-    # (b) duplicated-subtree removal, the r21 §12 pattern extended (guide
-    #     §2.4): lazy localCheckpoints on bounded multiply-consumed
-    #     relations — executed plans get zero runtime exchange reuse, so a
-    #     k-consumer relation executed k times per action (and its subtree
-    #     sat k times in every re-planned count(), paying analysis cost
-    #     too). Each change A/B'd old-vs-new in one session with result
-    #     rows asserted identical; cold first-run improves in every case
-    #     (removed work, not caching):
-    "ml_retrieval_eval",
-    "ml_ndcg_eval",
-    "ml_confusion_matrix",
-    "join_interval_overlap",
-    "join_allen_interval_algebra",
-    "agg_grouped_quartiles",
-    "events_retention_triangle",
-    "events_dau_wau_stickiness",
-    "ml_rank_biased_overlap",
-    "text_repetition_filter",
-    "text_source_tvd",
-    "stats_theil_sen",
-    "stats_mann_whitney",
-    "stats_ks_two_sample",
-    "ml_auc_roc",
-    "dedup_chunk_dupshare",
-    "ml_silhouette_centroid",
-    # (c) the IVF coarse codebook (ivf_route cent_flat, K rows) feeds BOTH
-    #     the assignment crossJoin and the probe crossJoin: checkpointing it
-    #     removes the duplicated DIM-wide flat-projection subtree from every
-    #     IVF plan (measured 0.68x on ann_ivf_topk, results identical):
-    "ann_ivf_topk",
-    "ann_ivf_filtered_topk",
-    "ann_ivfpq_topk",
-    "ann_ivf_probe_sweep",
-    "ann_filtered_probe_sweep",
-    "dedup_semdedup_prune",
-    "stream_ivf_index_filtered_probe",
-    # (d) aggregation restructures, bit-identical by argmax/mergeability:
-    #     llm_dpo_pair_builder's two window sorts + group-key self-join
-    #     collapse to ONE partial-aggregable max_by/min_by groupBy (the
-    #     rank-1 row of a ROW_NUMBER window IS an argmax; the ivf_route
-    #     max_by precedent); sketch_hll_union's states ∪ merged-FROM-states
-    #     becomes ONE explode(scope,'__all__') aggregation (register-wise
-    #     MAX is mergeable — the r21 §11 sketch_quantile_histogram shape):
-    "llm_dpo_pair_builder",
-    "sketch_hll_union",
-    # (e) second sweep of the same class: every remaining computed-relation
-    #     SELF-JOIN whose build executed on both sides (plus extra
-    #     consumers) — the winnowed minimizer set, the exact-substring gram
-    #     set, the (user, type) baskets (x3 and x4 consumers), and the
-    #     symmetrized two-hop edge list:
-    "dedup_minimizer_pairs",
-    "dedup_exact_substring",
-    "events_cooccurrence_pairs",
-    "events_association_rules",
-    "graph_two_hop_reach",
-    # (f) third sweep: the langid classifier's `best` relation (consumed by
-    #     the final union AND the unmatched anti-join — the whole scoring
-    #     subtree executed twice) and the quantile sketch state `scoped`
-    #     (consumed by the rank targets AND the cumulative walk — one
-    #     lineitem pass instead of two):
-    "text_char_trigram_langid",
-    "sketch_quantile_histogram",
 ]
 
 
@@ -184,273 +81,79 @@ def _row_is_green(row: Any) -> bool:
     )
 
 
-def _driver_verified_names() -> set[str]:
-    """Names whose LATEST driver-written CORRECTNESS row is green.
+#: Where the driver writes ``CORRECTNESS_r{N}.json``; tests point it at a
+#: tmpdir to simulate driver rounds.
+_HISTORY_ROOT = Path(__file__).resolve().parent.parent
 
-    Only rows the DRIVER recorded count -- local pytest oracle checks are
-    the builder grading its own homework and deliberately do not register
-    here. Files are scanned in round order so a later row (green or not)
-    supersedes any earlier one for the same name.
-    """
-    import json
-    import re
-    from pathlib import Path
 
-    root = Path(__file__).resolve().parent.parent
-    paths = [
+@dataclass
+class Verification:
+    """One name's driver rows: how many, first and last green round, and
+    whether the latest row is green."""
+
+    rows: int = 0
+    first_green: int | None = None
+    last_green: int | None = None
+    latest_green: bool = False
+
+
+def driver_history() -> tuple[int, dict[str, Verification]]:
+    """``(newest driver round, name -> Verification)`` over every
+    driver-written ``CORRECTNESS_r*.json`` — the only reader of that format.
+
+    Only rows the DRIVER recorded count: local pytest oracle checks do not
+    register here. Files are read in round order, so a later row (green or
+    not) supersedes any earlier one for the same name."""
+    rounds = sorted(
         (int(m.group(1)), p)
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", p.name))
-    ]
-    latest: dict[str, Any] = {}
-    for _, path in sorted(paths):
+        for p in _HISTORY_ROOT.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    )
+    hist: dict[str, Verification] = {}
+    for rnd, path in rounds:
         try:
             data = json.loads(path.read_text())
         except (OSError, ValueError):
             continue
-        if isinstance(data, dict):
-            latest.update(
-                (k, v) for k, v in data.items() if isinstance(k, str)
-            )
-    return {n for n, row in latest.items() if _row_is_green(row)}
+        if not isinstance(data, dict):
+            continue
+        for name, row in data.items():
+            v = hist.setdefault(name, Verification())
+            v.rows += 1
+            v.latest_green = _row_is_green(row)
+            if v.latest_green:
+                v.last_green = rnd
+                if v.first_green is None:
+                    v.first_green = rnd
+    return (rounds[-1][0] if rounds else 0), hist
+
+
+def _driver_verified_names() -> set[str]:
+    """Names whose LATEST driver-written CORRECTNESS row is green."""
+    return {n for n, v in driver_history()[1].items() if v.latest_green}
 
 
 def _round_token() -> int:
-    """The upcoming round number: 1 + the highest round among the
-    driver-written CORRECTNESS files. Deterministic within a round (the
-    driver writes its file AFTER verification), advances between rounds."""
-    import re
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    rounds = [
-        int(m.group(1))
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", p.name))
-    ]
-    return (max(rounds) + 1) if rounds else 1
+    """The upcoming round number: 1 + the newest driver round on disk."""
+    return driver_history()[0] + 1
 
 
-#: Bucket-3 cyclic-shift stride PLANNING DEFAULT: the per-round advance
-#: assumed for rounds whose actual head size is unknown (historical rounds
-#: 1–9, which used a fixed ``shift = token * 30``, and hypothetical future
-#: tokens in tests). Rounds from 10 on record their ACTUAL stride in
-#: ``_ROUND_STRIDES`` — see ``reconfirm_stride``.
-RECONFIRM_STRIDE = 30
-
-#: Conservative floor of the driver's per-round verification budget
-#: (observed: exactly 50 rows in rounds 1, 2, 4, 9; 45 leaves margin).
-#: Re-confirmation slots per round = this cap minus the head block
-#: (buckets 1+2), never less than zero.
-DRIVER_CAP_FLOOR = 45
-
-#: Per-round ACTUAL bucket-3 stride, recorded when a round's registration
-#: surface is final (maintained per round like ``_CHANGED_THIS_ROUND``,
-#: pinned by tests/test_registry_rotation.py::test_round_strides_recorded).
-#: VERDICT r9 #8: a fixed 30-stride both OVERSHOOTS rounds whose head
-#: block eats most of the cap (names in the skipped gap silently miss
-#: their re-confirmation window) and UNDERSHOOTS empty-bucket rounds
-#: (which could re-confirm ~45, not 30). The recorded value is
-#: ``max(0, DRIVER_CAP_FLOOR - |bucket1| - |bucket2|)`` — exactly the
-#: bucket-3 coverage the driver's budget provably reaches that round —
-#: and the cumulative shift advances by it, so consecutive windows TILE
-#: the cycle with no gaps and no reliance on unverified slots.
-#: r10: 44 never-verified + 1 changed = head 45 → stride 0 (the round's
-#: driver budget is spent on first-time coverage; rotation resumes r11).
-#: r11: the full 37-query r10 deferred queue activated (VERDICT r10 #2's
-#: hard bar: >=37 first-time rows), 0 changed → stride 8. The stride-
-#: vs-activation trade (VERDICT #3 asked >=10 OR a justified decision):
-#: 37 + 10 > 45, so full activation wins and r11 registers ZERO net-new
-#: active queries — r12's head is just its own activations, letting the
-#: r12 stride rebound to ~30+ (projected full-recycle math in NOTES_r11).
-#: r12: the full 25-query r11 deferred queue activated (VERDICT r11 #1),
-#: 0 changed → head 25, stride 20 — exactly the NOTES_r11 #3 projection.
-#: Per the committed taper (VERDICT r11 #2), r12 registers ≤10 net-new
-#: queries so r13's head stays small and strides rebound to 35+; updated
-#: recycle arithmetic in NOTES_r12.
-#: r13: the 4-query r12 deferred queue activated (VERDICT r12 #3: CUPED,
-#: Cochran–Armitage, Page's L, DSIR), 0 changed → head 4, stride 41 —
-#: exactly the NOTES_r12 #2 projection, recorded BEFORE the driver runs
-#: per VERDICT r12 #2. Recycle arithmetic restated in NOTES_r13.
-#: r14: the 2-query r13 deferred queue activated (VERDICT r13 #1:
-#: Good–Turing missing mass, Wald SPRT) = bucket 1, PLUS the DSIR
-#: exchange-reuse rewrite on the changed list (VERDICT r13 #5) = bucket 2
-#: → head 2 + 1 = 3, stride 45 − 3 = 42. NOTE: VERDICT r13 #2 projected
-#: 43 from head 2, but that arithmetic predates its own mandate #5
-#: putting llm_dsir_importance_weights on the changed list; the ledger
-#: records the CI-enforced cap arithmetic (head 3), recorded BEFORE the
-#: driver runs.
-#: r15: the 1-query r14 deferred queue activated (VERDICT r14 #1:
-#: graph_hits_bipartite) = bucket 1, PLUS the CDC write-time change-feed
-#: rewrite on the changed list (VERDICT r14 #5: delta_cdc_feed_commits)
-#: = bucket 2 → head 1 + 1 = 2, stride 45 − 2 = 43, recorded BEFORE the
-#: driver runs. VERDICT r14 #1 projected 44 "if the changed list stays
-#: empty"; its own mandate #5 rewrites the CDC feed, so the list is not
-#: empty — same interaction as r14, the cap arithmetic wins.
-#: r16: the 1-query r15 deferred queue activated (VERDICT r15 #1:
-#: spatial_dbscan_clusters) = bucket 1, PLUS the CDF null-safety fix
-#: (ADVICE r15 #3) putting delta_cdc_feed_commits on the changed list
-#: = bucket 2 → head 1 + 1 = 2, stride 45 − 2 = 43, recorded BEFORE the
-#: driver runs. VERDICT r15 #1 projected 44 "if the changed list stays
-#: empty"; the ADVICE null-safety mandate changes the query's oracle SQL,
-#: so the list is not empty — the same mandate-interaction as r14/r15,
-#: the cap arithmetic wins.
-#: r17: the 1-query r16 deferred queue activated (VERDICT r16 #1:
-#: ann_filtered_topk) = bucket 1, and the changed list stays EMPTY this
-#: round (see the r17 note on _CHANGED_THIS_ROUND: all three ADVICE fixes
-#: are bench-policy / driver-side-metadata / never-verified-oracle-text —
-#: none touches what the driver compares for a verified name) → head 1,
-#: stride 45 − 1 = 44, recorded BEFORE the driver runs. This matches
-#: VERDICT r16 #1's projection ("44 if the changed list stays empty") —
-#: the first round since r13 where the projection and the cap arithmetic
-#: agree, because no mandate rewrote a verified query.
-#: r18: the 2-query r17 deferred queue activated (VERDICT r17 #1:
-#: ann_ivf_filtered_topk, ann_filtered_probe_sweep) = bucket 1, and the
-#: changed list stays EMPTY (see the r18 note on _CHANGED_THIS_ROUND:
-#: ADVICE #1 is a plan-preserving factoring md5-pinned byte-identical for
-#: the verified sweep, ADVICE #2 is docstring prose) → head 2, stride
-#: 45 − 2 = 43, recorded BEFORE the driver runs. This matches VERDICT
-#: r17 #1's projection ("43 if the changed list stays empty") — the
-#: second consecutive round where the projection and the cap arithmetic
-#: agree.
-#: r19: the 1-query r18 deferred queue activated (VERDICT r18 #1:
-#: stream_ivf_index_append) = bucket 1, and the changed list stays EMPTY
-#: (see the r19 note on _CHANGED_THIS_ROUND: the ADVICE r18 #1
-#: exactly-once fix rewrites the SAME never-verified query's sink, and
-#: the fired-watch-rule resolution is profiling + a NOTES rule amendment
-#: — no verified plan changes) → head 1, stride 45 − 1 = 44, recorded
-#: BEFORE the driver runs. This matches VERDICT r18 #1's projection
-#: ("44 if the changed list stays empty") — the third consecutive round
-#: where the projection and the cap arithmetic agree.
-#: r20 (FINAL round): the 1-query r19 deferred queue activated (VERDICT
-#: r19 #1: stream_ivf_index_filtered_probe) = bucket 1, and the changed
-#: list stays EMPTY (see the r20 note on _CHANGED_THIS_ROUND: the ADVICE
-#: r19 items touch only the two never-verified-or-r19-fresh stream_ivf_*
-#: builders' Python plumbing and a test; the r19-verified
-#: stream_ivf_index_append plan is md5-pinned unchanged) → head 1,
-#: stride 45 − 1 = 44, recorded BEFORE the driver runs. This matches
-#: VERDICT r19 #1's projection ("44 if the changed list stays empty") —
-#: the fourth consecutive round where the projection and the cap
-#: arithmetic agree. Final shape: 454 active / 0 deferred.
-#: KEEP IN SYNC when activating queries — test_round_strides_recorded_and_
-#: continuous recomputes the arithmetic against the live registry.
-#: r21 (OPTIMIZATION round 1): zero activations (registry final at 454
-#: since r20) and 32 plan-rewritten names on the changed list (bucket 2;
-#: 23 from session 1 + nine duplicated-subtree removals from session 2:
-#: sketch_quantile_histogram, agg_rfm_segmentation,
-#: dedup_containment_pairs, dedup_simhash_pairs, dedup_minhash_lsh,
-#: multimodal_dhash_pairs, text_tfidf_top_terms,
-#: llm_dsir_importance_weights, events_cohort_ltv) → head 0 + 32 = 32,
-#: stride 45 − 32 = 13, recorded BEFORE the driver runs per the r12+
-#: protocol.
-#: r22 (OPTIMIZATION round 2): zero activations and 34 plan-rewritten
-#: names on the changed list — and THREE of the round's head slots are
-#: bucket-1 re-entries, not changes: the r21 driver run's DuckDB oracle
-#: OOM'd (host memory pressure, err rows) on ann_filtered_probe_sweep,
-#: dedup_minhash_lsh and multimodal_dhash_pairs, so their latest rows are
-#: non-green and _driver_verified_names() re-prioritizes them
-#: automatically (ann_filtered_probe_sweep is also on the changed list and
-#: lands in bucket 1, not bucket 2). Head = 3 never/non-green + 33
-#: verified-changed = 36, stride 45 − 36 = 9, recorded BEFORE the driver
-#: runs per the r12+ protocol.
-_ROUND_STRIDES: dict[int, int] = {
-    10: 0, 11: 8, 12: 20, 13: 41, 14: 42, 15: 43, 16: 43, 17: 44,
-    18: 43, 19: 44, 20: 44, 21: 13, 22: 9,
-}
-
-#: First round under the recorded-stride scheme. Rounds before this used
-#: the fixed formula ``shift = token * RECONFIRM_STRIDE``; the cumulative
-#: scheme anchors at that formula's value for round _DYNAMIC_BASE - 1, so
-#: the r10 cutover re-covers the r9 window — healing, not skipping (r9's
-#: 35-name head meant most of its claimed 30-slot window was never
-#: actually verified).
-_DYNAMIC_BASE = 10
-
-
-def reconfirm_stride(
-    round_token: int | None = None, head_size: int | None = None
-) -> int:
-    """Bucket-3 slots the rotation advances for ``round_token``.
-
-    Resolution order: recorded value in ``_ROUND_STRIDES`` (exact);
-    pre-r10 rounds → the historic fixed ``RECONFIRM_STRIDE``; otherwise
-    derived live from the head size (``DRIVER_CAP_FLOOR - |head|``,
-    floored at 0) for the current round, or the planning default for
-    hypothetical future tokens where the head is unknowable.
-
-    A PAST dynamic-scheme round missing from the ledger would silently
-    fall back to the planning default and mis-tile every later window
-    (ADVICE r10 item 2). That completeness is enforced by CI
-    (tests/test_registry_rotation.py::test_round_strides_recorded_and_
-    continuous asserts every round in [_DYNAMIC_BASE, current) is
-    recorded) rather than by raising here: this function sits on the
-    driver's ``queries()`` path, and a raise would turn a bookkeeping
-    omission into a zero-row driver round — strictly worse than one
-    mis-tiled re-confirmation window that CI flags the same day."""
-    token = _round_token() if round_token is None else round_token
-    if token in _ROUND_STRIDES:
-        return _ROUND_STRIDES[token]
-    if token < _DYNAMIC_BASE:
-        return RECONFIRM_STRIDE
-    if head_size is None:
-        return RECONFIRM_STRIDE
-    return max(0, DRIVER_CAP_FLOOR - head_size)
-
-
-def _cumulative_shift(round_token: int) -> int:
-    """Total bucket-3 positions consumed before ``round_token``.
-
-    Pre-base tokens reproduce the historic fixed formula exactly
-    (``token * RECONFIRM_STRIDE``); the cumulative scheme anchors at the
-    formula's value for round ``_DYNAMIC_BASE - 1`` — i.e. the START of
-    the last fixed-scheme window, deliberately re-covering it, because a
-    35-name head in r9 meant most of that claimed 30-slot window was
-    never actually driver-verified (healing, never skipping). Each
-    recorded round then advances by its actual stride, so windows tile:
-    round k covers cyclic positions [shift(k), shift(k) + stride(k)) and
-    shift(k+1) starts exactly where round k's guaranteed coverage ended."""
-    if round_token < _DYNAMIC_BASE:
-        return round_token * RECONFIRM_STRIDE
-    base = (_DYNAMIC_BASE - 1) * RECONFIRM_STRIDE
-    return base + sum(
-        reconfirm_stride(j) for j in range(_DYNAMIC_BASE, round_token)
-    )
-
-
-def verification_order(
-    names: list[str] | None = None, round_token: int | None = None
-) -> list[str]:
-    """Derived driver-verification priority over registered query names.
-
-    Bucket 3 (cumulatively green, unchanged) rotates with the round — but
-    as a CYCLIC SHIFT of one fixed md5(name) ordering, not a fresh per-round
-    shuffle. A fresh shuffle per round (the r5–r8 scheme) re-confirms a
-    different subset each round but gives only a coupon-collector bound on
-    when a given name recurs; the judge's bar (VERDICT r7 #7 / r8 #6) is a
-    DETERMINISTIC bound. The shift is CUMULATIVE over per-round strides
-    (``reconfirm_stride``): round k's window is the first stride(k)
-    bucket-3 slots starting at ``_cumulative_shift(k)``, and the next
-    round starts exactly where that window ends, so the windows tile the
-    cycle — full re-confirmation in however many rounds the strides take
-    to sum to N, at most ceil(N / RECONFIRM_STRIDE) when every round
-    records the planning default (pinned by
-    tests/test_registry_rotation.py::test_reconfirmation_completeness_bound).
-    """
+def verification_order(names: list[str] | None = None) -> list[str]:
+    """Driver-verification priority over registered query names: never
+    verified or non-green latest row (registration order), then
+    ``_CHANGED_THIS_ROUND``, then the rest by last green round, oldest
+    first (the stable sort keeps registration order among ties)."""
     if names is None:
         _ensure_loaded()
         names = list(_QUERIES)
-    verified = _driver_verified_names()
+    hist = driver_history()[1]
+    verified = {n for n, v in hist.items() if v.latest_green}
     never = [n for n in names if n not in verified]
     changed = [n for n in _CHANGED_THIS_ROUND if n in names and n in verified]
     head = {*never, *changed}
-    rest = [n for n in names if n not in head]
-    import hashlib
-
-    seed = _round_token() if round_token is None else round_token
-    rest.sort(key=lambda n: hashlib.md5(n.encode()).hexdigest())
-    if rest:
-        shift = _cumulative_shift(seed) % len(rest)
-        rest = rest[shift:] + rest[:shift]
+    rest = sorted(
+        (n for n in names if n not in head), key=lambda n: hist[n].last_green
+    )
     return never + changed + rest
 
 
